@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 object Bench {
@@ -61,6 +62,7 @@ object Bench {
       val canaryIoSamples = Seq.newBuilder[Double]
       val foreignStart = foreignCpuJiffies()
       val stealStart = stealJiffies()
+      val compilesStart = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       canarySamples += canarySec(spark)
       canaryIoSamples += canaryIoSec()
       val m = SparkEntry.queries.map { case (name, fn) =>
@@ -98,6 +100,11 @@ object Bench {
       canaryIoSamples += canaryIoSec()
       val foreignEnd = foreignCpuJiffies()
       val stealEnd = stealJiffies()
+      // generated-class compiles (Janino runs) this round: a warm round
+      // should mostly hit the codegen cache, so a large count means the
+      // cache is evicting the working set (Sessions.CodegenCacheEntries)
+      System.err.println(s"[bench] round=$round codegen_compiles=" +
+        (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compilesStart))
       val cs = canarySamples.result()
       canaries += ((cs.min, cs.max))
       val cio = canaryIoSamples.result()

@@ -164,9 +164,13 @@ object Fuzzy {
       // verification payload, O(key length) small by the operator's
       // contract (keys are ids/names), carried on the prefix rows so the
       // verification stage needs NO join back to the gram frames.
+      // sort_array makes the set's element order canonical: the unordered
+      // frame collects in evaluation order, and the final .distinct() must
+      // see byte-identical sets on every prefix row of a pair, recomputed
+      // partitions included.
       grams.join(broadcast(freq), "g")
         .withColumn(sizeCol, count(lit(1)).over(wPart))
-        .withColumn(setCol, collect_list(col("g")).over(wPart))
+        .withColumn(setCol, sort_array(collect_list(col("g")).over(wPart)))
         .withColumn("__rk", row_number().over(wOrd))
         .where(col("__rk") <=
           col(sizeCol) - ceil(col(sizeCol) * lit(threshold) - lit(1e-9)) + 1)

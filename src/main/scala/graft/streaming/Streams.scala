@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.core.{Casts, Tables}
+import graft.core.{Casts, Sessions, Tables}
 
 /** Structured Streaming surface. The reference is batch-only (SURVEY §2.8);
   * its "incremental" contract is date-window re-runs. This module provides
@@ -286,7 +286,7 @@ object Streams extends Serializable {
     // JVMs that cycle SparkSessions don't accumulate immortal children
     childSessions.keySet.removeIf(_._1.sparkContext.isStopped)
     childSessions.computeIfAbsent((spark, statePartitions, noDataBatches), { _ =>
-      val s = spark.newSession()
+      val s = Sessions.child(spark)
       s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",

@@ -7,4 +7,6 @@ object GraftTestShim {
   def exprCol(e: org.apache.spark.sql.catalyst.expressions.Expression)
       : org.apache.spark.sql.Column =
     ExpressionUtils.column(e)
+  def unsetConf(spark: org.apache.spark.sql.SparkSession, key: String): Unit =
+    spark.asInstanceOf[SparkSession].sessionState.conf.unsetConf(key)
 }

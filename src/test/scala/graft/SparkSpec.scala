@@ -14,6 +14,9 @@ object TestSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.scheduler.mode", "FAIR")
+      .config(graft.core.Sessions.CodegenCacheKey,
+        graft.core.Sessions.CodegenCacheEntries.toString)
+      .config(graft.core.Sessions.ArtifactIsolationKey, "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
